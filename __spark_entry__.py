@@ -846,27 +846,13 @@ def q_f8_case_list_render(spark, sf_dir):
     )
 
 
-# Per-process cache of the V1 scratch-bundle existence result (sf_dir →
-# (n_present, n_expected)); see q_v_validation_suite.
-_V1_BUNDLE_CACHE: dict[str, tuple[int, int]] = {}
-
-
 def reset_bench_caches(spark=None) -> None:
-    """Clear the per-process result caches (V1 scratch bundle, layout
-    compaction) so a benchmark rep pays the REAL work of its query instead
-    of re-asserting a previous rep's artifact checks. bench.py calls this at
-    the top of every rep: medians then measure the same work the r1/r2
-    single-shot baselines measured, keeping the core total apples-to-apples.
-
-    When a SparkSession is passed, Spark's DataFrame cache is cleared too:
-    operators that persist() an intermediate (containment_join's with_pos
-    since r8) would otherwise be re-served from the previous rep's cache —
-    the CacheManager matches plans by canonicalized sameResult, so even a
-    freshly-built identical query hits it."""
-    _V1_BUNDLE_CACHE.clear()
-    _COMPACTION_CACHE.clear()
-    _ZONEMAP_CACHE.clear()
-    _MM_INGEST_CACHE.clear()
+    """Clear Spark's DataFrame cache so a benchmark rep pays the real work
+    of its query. Operators that persist() an intermediate (containment_join's
+    with_pos since r8) would otherwise be re-served from the previous rep's
+    cache — the CacheManager matches plans by canonicalized sameResult, so
+    even a freshly-built identical query hits it. Without a session this is
+    a no-op."""
     if spark is not None:
         spark.catalog.clearCache()
 
@@ -907,30 +893,20 @@ def q_v_validation_suite(spark, sf_dir):
     # clinical.py:790-796). Scoped to a small deterministic slice — V1 checks
     # file EXISTENCE, so its cost should be the writer's fixed overhead, not
     # a full-table export (the full export path is integration-tested).
-    # The scratch write is cached per sf_dir within the process: the write
-    # itself is deterministic, so repeated suite runs (bench's median-of-3)
-    # re-assert the recorded existence result instead of re-paying the
-    # writer's ~10 fixed-overhead driver jobs each run.
-    cached = _V1_BUNDLE_CACHE.get(sf_dir)
-    if cached is None:
-        sample_view = (
-            customer.filter(F.col("c_custkey") <= 100)
-            .select(
-                F.col("c_name").alias("SAMPLE_ID"),
-                F.col("c_custkey").cast("string").alias("PATIENT_ID"),
-                F.col("c_mktsegment").alias("CANCER_TYPE"),
-            )
-            .coalesce(1)  # 100-row slice: one task per job, not 32
+    sample_view = (
+        customer.filter(F.col("c_custkey") <= 100)
+        .select(
+            F.col("c_name").alias("SAMPLE_ID"),
+            F.col("c_custkey").cast("string").alias("PATIENT_ID"),
+            F.col("c_mktsegment").alias("CANCER_TYPE"),
         )
-        patient_view = sample_view.select("PATIENT_ID").dropDuplicates()
-        out_dir = tempfile.mkdtemp(prefix="bundle_v1_")
-        artifacts = write_study_bundle(out_dir, "v1check", patient_view, sample_view)
-        cached = (
-            sum(os.path.exists(p) for p in artifacts.values()),
-            len(artifacts),
-        )
-        _V1_BUNDLE_CACHE[sf_dir] = cached
-    n_present, n_expected = cached
+        .coalesce(1)  # 100-row slice: one task per job, not 32
+    )
+    patient_view = sample_view.select("PATIENT_ID").dropDuplicates()
+    out_dir = tempfile.mkdtemp(prefix="bundle_v1_")
+    artifacts = write_study_bundle(out_dir, "v1check", patient_view, sample_view)
+    n_present = sum(os.path.exists(p) for p in artifacts.values())
+    n_expected = len(artifacts)
     v1 = spark.range(1).select(
         F.lit("bundle_files_exist").alias("check"),
         F.when(F.lit(n_present == n_expected), F.lit("OK"))
@@ -4172,16 +4148,11 @@ def q_profile_key_skew(spark, sf_dir):
     return key_skew_report(events, "event_type", top_k=10, num_partitions=32)
 
 
-_COMPACTION_CACHE: dict[str, tuple[int, int, int, int]] = {}
-
-
 def q_layout_compaction(spark, sf_dir):
     """Small-file compaction end-to-end: documents fragmented into 16
     dribble files (the accreting-ingest pathology), then compacted to
     ceil(total_bytes / target) files via one round-robin repartition write
-    (sources/layout.py). The compaction itself is cached per sf_dir (the
-    writes are deterministic; bench's median-of-3 should re-assert, not
-    re-write). Returns per-source counts + exact n_chars sums from the
+    (sources/layout.py). Returns per-source counts + exact n_chars sums from the
     COMPACTED files joined with engine-side booleans (fragmented file count
     == 16, compacted file count == planned target) — content equality and
     plan conformance in one oracle-checkable surface."""
@@ -4192,19 +4163,15 @@ def q_layout_compaction(spark, sf_dir):
         list_data_files,
     )
 
-    cached = _COMPACTION_CACHE.get(sf_dir)
-    if cached is None:
-        docs = _t(spark, sf_dir, "documents")
-        frag_dir = tempfile.mkdtemp(prefix="frag_docs_")
-        comp_dir = tempfile.mkdtemp(prefix="compact_docs_")
-        docs.repartition(16).write.mode("overwrite").parquet(frag_dir)
-        n_frag = len(list_data_files(spark, frag_dir))
-        plan = compact_small_files(
-            spark, frag_dir, comp_dir, target_file_bytes=256 * 1024
-        )
-        cached = (n_frag, plan["n_target"], plan["n_output_files"], comp_dir)
-        _COMPACTION_CACHE[sf_dir] = cached
-    n_frag, n_target, n_out, comp_dir = cached
+    docs = _t(spark, sf_dir, "documents")
+    frag_dir = tempfile.mkdtemp(prefix="frag_docs_")
+    comp_dir = tempfile.mkdtemp(prefix="compact_docs_")
+    docs.repartition(16).write.mode("overwrite").parquet(frag_dir)
+    n_frag = len(list_data_files(spark, frag_dir))
+    plan = compact_small_files(
+        spark, frag_dir, comp_dir, target_file_bytes=256 * 1024
+    )
+    n_target, n_out = plan["n_target"], plan["n_output_files"]
     compacted = spark.read.parquet(comp_dir)
     return compacted.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -4212,9 +4179,6 @@ def q_layout_compaction(spark, sf_dir):
         F.lit(n_frag == 16).alias("fragmented_16_files"),
         F.lit(n_out == n_target).alias("compacted_to_plan"),
     )
-
-
-_ZONEMAP_CACHE: dict[str, str] = {}
 
 
 def q_zonemap_pruning(spark, sf_dir):
@@ -4232,14 +4196,11 @@ def q_zonemap_pruning(spark, sf_dir):
         zone_map_pruning_report,
     )
 
-    path = _ZONEMAP_CACHE.get(sf_dir)
-    if path is None:
-        import tempfile
+    import tempfile
 
-        orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-        path = tempfile.mkdtemp(prefix="zonemap_orders_")
-        write_bucket_clustered(orders, path, "o_orderkey", 500)
-        _ZONEMAP_CACHE[sf_dir] = path
+    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    path = tempfile.mkdtemp(prefix="zonemap_orders_")
+    write_bucket_clustered(orders, path, "o_orderkey", 500)
     return zone_map_pruning_report(
         spark, path, "o_orderkey", 600, 2200
     ).orderBy("zm_bucket")
@@ -4258,14 +4219,11 @@ def q_multimodal_binary_ingest(spark, sf_dir):
         ingest_binary_files,
     )
 
-    dump = _MM_INGEST_CACHE.get(sf_dir)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-    if dump is None:
-        dump = tempfile.mkdtemp(prefix="mm_ingest_")
-        for r in docs.select("doc_id", "text").collect():  # 60 driver writes
-            with open(os.path.join(dump, f"doc_{r['doc_id']}.txt"), "wb") as fh:
-                fh.write(r["text"].encode("utf-8"))
-        _MM_INGEST_CACHE[sf_dir] = dump
+    dump = tempfile.mkdtemp(prefix="mm_ingest_")
+    for r in docs.select("doc_id", "text").collect():  # 60 driver writes
+        with open(os.path.join(dump, f"doc_{r['doc_id']}.txt"), "wb") as fh:
+            fh.write(r["text"].encode("utf-8"))
     files = ingest_binary_files(spark, dump, "*.txt")
     parsed = files.select(
         F.regexp_extract(F.col("path"), r"doc_(\d+)\.txt$", 1)
@@ -4283,9 +4241,6 @@ def q_multimodal_binary_ingest(spark, sf_dir):
         )
         .orderBy("doc_id")
     )
-
-
-_MM_INGEST_CACHE: dict[str, str] = {}
 
 
 def q_parquet_schema_evolution(spark, sf_dir):
@@ -6835,146 +6790,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
     rest = [n for n in all_q if n not in set(window)]
     return {n: all_q[n] for n in [*window, *rest]}
-
-
-# Round-9 driver window (first 50 entries, asserted <=50): 2 new r9
-# queries, then re-check slots for every r9-touched code path
-# (aggregates/sampling running-sum rewrite; graph.py sssp repartition +
-# early-exit; multimodal id3/png guards; sinks %.12g + single-file writer
-# refactor; the maf error side-band), then freshness re-checks of entries
-# with no driver-window check since r4 or earlier.
-_R9_WINDOW = [
-    # new round-9 queries
-    "maf_error_report",
-    "s5_float_g_format",
-    # aggregates.py/sampling.py: driver-side bucket offsets in
-    # global_running_sum + numeric order-col validation (its consumers)
-    "s4_chunk_assignment",
-    "running_revenue",
-    "sample_pack_sequences",
-    "sequence_packing",
-    # graph.py: sssp edge repartition + convergence early-exit (same file:
-    # hits/pagerank share the layout/checkpoint helpers)
-    "graph_sssp",
-    "graph_hits",
-    "graph_pagerank",
-    # multimodal.py: id3v2 truncated-extended-header bail, PNG palette
-    # bounds check, ZIP64 interop pinning
-    "multimodal_png_roundtrip",
-    "multimodal_id3_tags",
-    "multimodal_mp3_frames",
-    "multimodal_zip_index",
-    "multimodal_zip64_index",
-    "multimodal_image_dhash",
-    # sinks.py/bundle.py: %.12g formatter, write_single_tsv, part-concat
-    # refactor, merged-artifact writer (their query-surface consumers)
-    "f8_case_list_render",
-    "f9_remove_pandas_float",
-    "v_validation_suite",
-    "bundle_cross_checks",
-    "meta_consistency",
-    "header_conformance",
-    "flagship_case_lists",
-    # maf.py query surface sharing the new error-report path
-    "maf_annotate_pipeline",
-    "maf_annotation_wide",
-    # freshness rotation: no driver-window slot since r4 or earlier
-    "tpch_q1_pricing_summary",
-    "tpch_q4_order_priority",
-    "tpch_q5_local_supplier",
-    "maf_annotate_by_variant",
-    "sim_topk_bruteforce",
-    "sim_ann_lsh",
-    "sim_mips_topk",
-    "sim_ivf_topk",
-    "sim_semantic_dedup",
-    "text_tfidf",
-    "text_bm25",
-    "text_cooccurrence_pmi",
-    "text_vocab_growth",
-    "sketch_hll_distinct",
-    "sketch_bloom_prefilter",
-    "sketch_count_min",
-    "events_sessionize",
-    "stream_hourly_counts",
-    "events_session_window",
-    "fuzzy_join_names",
-    "dedup_components",
-    "dedup_cross_corpus",
-    "pii_redaction",
-    "decontamination",
-    "asof_join_last_purchase",
-    "window_topk_per_group",
-]
-
-
-# Round-10 driver window (first 50 entries, asserted <=50): re-check
-# slots for every r10-touched code path first (graph.py hits
-# normalization rewrite; maf.py oncoprint literal-rank; aggregates.py
-# running-sum persist + broadcast-offsets fallback; sinks.py empty-part
-# concat guard; plans/bundle.py Dataset drop + load-stage case lists +
-# cases_all wording), then PURE freshness: the registry's
-# longest-undriven cohort. CORRECTNESS_r01-r09 show the oldest
-# last-checked entries are the r1/r2 cohort (text_language_report r1;
-# the TPC-H tail, rollup/cube, window_moving_avg, attribution, ivf
-# r2) and then r3 — older than the r5-r6 cohort VERDICT r9 suggested,
-# so the window follows the data. Per-entry last-checked rounds are
-# listed in STATUS.md.
-_R10_WINDOW = [
-    # r10-touched code paths
-    "graph_hits",
-    "maf_oncoprint",
-    "running_revenue",
-    "sample_pack_sequences",
-    "sequence_packing",
-    "flagship_case_lists",
-    "a1_case_lists",
-    "j5_semi_join",
-    "f8_case_list_render",
-    "meta_consistency",
-    "bundle_cross_checks",
-    "v_validation_suite",
-    "s5_float_g_format",
-    "s4_chunk_assignment",
-    # freshness: last driver-checked r1/r2
-    "text_language_report",
-    "cube_revenue",
-    "embedding_near_dup",
-    "events_attribution",
-    "events_json_extract",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "percentiles_by_segment",
-    "range_join_qty_size",
-    "rollup_revenue",
-    "sim_ivf_trained",
-    "text_top_ngrams",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_parts",
-    "tpch_q12_late_priority",
-    "tpch_q13_order_distribution",
-    "tpch_q14_promo_share",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_counts",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q18_large_volume",
-    "tpch_q19_brand_bands",
-    "tpch_q20_excess_shipping",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q22_sales_opportunity",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "window_moving_avg",
-    # freshness: last driver-checked r3
-    "cdc_apply_changelog",
-    "data_splits",
-    "dedup_components_star",
-    "dedup_keep_best",
-    "emb_l2_normalize",
-]
 
 
 # Round-11 driver window (first 50 entries, asserted <=50): re-check

@@ -105,6 +105,7 @@ def cmd_maf(args: argparse.Namespace) -> int:
         http_annotator,
         split_annotation_errors,
     )
+    from iatlas_cbioportal_export_spark.plans.bundle import write_mutations
     from iatlas_cbioportal_export_spark.sources.readers import read_maf_folder
     from iatlas_cbioportal_export_spark.sources.sinks import write_chunked_tsv
 
@@ -115,22 +116,7 @@ def cmd_maf(args: argparse.Namespace) -> int:
         return 1
     annotator = http_annotator(args.endpoint) if args.endpoint else fake_annotator
     ok, failed = split_annotation_errors(annotate(maf, annotator=annotator))
-    write_chunked_tsv(drop_chrm(ok), os.path.join(args.out, "data_mutations_extended"),
-                      max_rows=args.max_rows)
-    # meta descriptor — the reference's generate_meta_files step (maf.py:209-216)
-    from iatlas_cbioportal_export_spark.sources.sinks import render_meta_file
-
-    with open(os.path.join(args.out, "meta_mutations_extended.txt"), "w") as fh:
-        fh.write(
-            render_meta_file(
-                {
-                    "cancer_study_identifier": f"iatlas_{args.dataset}",
-                    "genetic_alteration_type": "MUTATION_EXTENDED",
-                    "datatype": "MAF",
-                    "data_filename": "data_mutations_extended",
-                }
-            )
-        )
+    write_mutations(args.out, args.dataset, drop_chrm(ok), max_rows=args.max_rows)
     n_failed = failed.count()
     if n_failed:
         write_chunked_tsv(failed, os.path.join(args.out, "annotation_errors"))
@@ -138,22 +124,6 @@ def cmd_maf(args: argparse.Namespace) -> int:
     return 0
 
 
-# The reference's bundle surface (utils.py:11-22 REQUIRED_OUTPUT_FILES).
-# Our writer names the mutation artifact ``data_mutations_extended`` (a
-# chunked directory, S4) where the reference has a single
-# ``data_mutations.txt`` — validate accepts either spelling.
-_MAF_ARTIFACT_NAMES = (
-    "data_mutations_extended",
-    "data_mutations.txt",
-    "data_mutations_extended.txt",
-)
-_MAF_META_NAMES = ("meta_mutations_extended.txt", "meta_mutations.txt")
-_PASSTHROUGH_FILES = (
-    "data_gene_signatures.txt",
-    "meta_gene_signatures.txt",
-    "data_rna_seq_mrna.txt",
-    "meta_rna_seq_mrna.txt",
-)
 # Columns that identify the gene row (not a sample) in the pass-through
 # matrices (gene-signature / RNA-seq: gene × sample wide tables).
 _MATRIX_GENE_COLS = {
@@ -172,21 +142,25 @@ def cmd_validate(args: argparse.Namespace) -> int:
     clinical-samples, V13 maf-vs-neoantigen keyset (``validate.py:135-157``,
     with ``--neoantigen``), and gene-signature / RNA-seq pass-through matrix
     checks (``validate.py:175-195``: present, non-empty, sample columns ⊆
-    clinical samples). The whole suite is ONE lazy findings union → one
-    Spark action; exit 1 on any ERROR row (ErrorFlagHandler semantics,
-    ``utils.py:52-58``)."""
+    clinical samples). The whole suite is ONE lazy findings union, collected
+    once: every finding is printed, and the exit code is 1 on any ERROR row
+    (ErrorFlagHandler semantics, ``utils.py:52-58``)."""
     from pyspark.sql import functions as F
 
     from iatlas_cbioportal_export_spark.operators.validation import (
         file_presence_findings,
         findings_union,
-        has_errors,
         keyed_dup_and_distinct_checks,
         keyset_preserved,
         keyset_subset,
         maf_value_conformance,
         required_columns_present,
         table_profile_checks,
+    )
+    from iatlas_cbioportal_export_spark.plans.bundle import (
+        PASSTHROUGH_FILES,
+        mutation_data_path,
+        required_files,
     )
     from iatlas_cbioportal_export_spark.sources.maf_schema import REQUIRED_MAF_COLS
     from iatlas_cbioportal_export_spark.sources.readers import (
@@ -198,24 +172,8 @@ def cmd_validate(args: argparse.Namespace) -> int:
     bundle = args.bundle
     findings = []
 
-    maf_name = next(
-        (n for n in _MAF_ARTIFACT_NAMES if os.path.exists(os.path.join(bundle, n))),
-        None,
-    )
-    maf_meta = next(
-        (n for n in _MAF_META_NAMES if os.path.exists(os.path.join(bundle, n))),
-        None,
-    )
-    required = [
-        "data_clinical_patient.txt",
-        "data_clinical_sample.txt",
-        "meta_clinical_patient.txt",
-        "meta_clinical_sample.txt",
-        "meta_study.txt",
-        maf_name or _MAF_ARTIFACT_NAMES[0],
-        maf_meta or _MAF_META_NAMES[0],
-    ]
-    optional = list(_PASSTHROUGH_FILES)
+    required = required_files(bundle)
+    optional = list(PASSTHROUGH_FILES)
     if args.strict:
         required += optional
         optional = []
@@ -262,22 +220,12 @@ def cmd_validate(args: argparse.Namespace) -> int:
         )
 
     # --- mutation data: V12 schema, value conformance, referential checks ---
-    if maf_name is not None:
-        maf_path = os.path.join(bundle, maf_name)
-        if os.path.isdir(maf_path):
-            # Infer types on the chunked directory: a header-only read would
-            # make every column a string and turn numeric checks (position
-            # ordering, allele counts) lexicographic. maf_value_conformance
-            # also casts defensively, but typed columns keep every downstream
-            # check honest.
-            maf = (
-                spark.read.option("sep", "\t")
-                .option("header", True)
-                .option("inferSchema", True)
-                .csv(maf_path)
-            )
-        else:
-            maf = read_tsv(spark, maf_path, comment="#")
+    maf_path = mutation_data_path(bundle)
+    if maf_path is not None:
+        # Inferred types (file or chunked directory alike): a header-only
+        # read would make every column a string and turn numeric checks
+        # (position ordering, allele counts) lexicographic.
+        maf = read_tsv(spark, maf_path, comment="#")
         findings.append(
             required_columns_present(
                 maf, REQUIRED_MAF_COLS, check="maf_required_columns"
@@ -305,7 +253,7 @@ def cmd_validate(args: argparse.Namespace) -> int:
                 )
 
     # --- pass-through matrices: non-empty + sample columns ⊆ clinical ---
-    for name in ("data_gene_signatures.txt", "data_rna_seq_mrna.txt"):
+    for name in (n for n in PASSTHROUGH_FILES if n.startswith("data_")):
         path = os.path.join(bundle, name)
         if not os.path.exists(path):
             continue
@@ -336,8 +284,11 @@ def cmd_validate(args: argparse.Namespace) -> int:
             )
 
     suite = findings_union(findings)
-    suite.show(200, truncate=False)
-    return 1 if has_errors(suite) else 0
+    rows = suite.collect()
+    print("\t".join(suite.columns))
+    for row in rows:
+        print("\t".join("" if v is None else str(v) for v in row))
+    return 1 if any(row["status"] == "ERROR" for row in rows) else 0
 
 
 def cmd_load(args: argparse.Namespace) -> int:

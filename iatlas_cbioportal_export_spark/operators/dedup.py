@@ -700,13 +700,16 @@ def _jaccard_prefix_candidates(toks, t: float):
         F.col("pos").alias("pb"), "tok",
     )
     # PPJoin overlap upper bound for a first-match at 0-based (pa, pb):
-    # 1 + min(tokens after the match on each side).
+    # 1 + min(tokens after the match on each side). Both products run in
+    # long: a set size times a ~2e6 micro-unit literal leaves int32 past
+    # ~1,075 tokens (wraps with ANSI off, raises with it on).
     ubound = 1 + F.least(
         F.col("na") - F.col("pa") - 1, F.col("nb") - F.col("pb") - 1
     )
     alpha_ok = (
-        ubound * F.lit(t_num + t_den)
-        >= F.lit(t_num) * (F.col("na") + F.col("nb")) - F.lit(t_num + t_den)
+        ubound.cast("long") * F.lit(t_num + t_den)
+        >= F.lit(t_num) * (F.col("na").cast("long") + F.col("nb"))
+        - F.lit(t_num + t_den)
     )
     return (
         a.join(b, on="tok")
@@ -851,12 +854,13 @@ def _jaccard_deletion_candidates(toks, t: float):
         .select("id", "n", F.col("ds.dpt").alias("dpt"), F.col("ds.sig").alias("sig"))
         .persist()
     )
-    # exact integer ⌈2·t_num·n / (t_num+t_den)⌉ — one long expression, no
+    # exact integer ⌈2·t_num·n / (t_num+t_den)⌉ — long multiply (an int
+    # one overflows past ~1,075 tokens) and integer floor division, no
     # float dust either way
-    kb = F.col("n") - (
-        (F.lit(2 * t_num) * F.col("n") + F.lit(t_num + t_den - 1))
-        .cast("long") / F.lit(t_num + t_den)
-    ).cast("long")
+    kb = F.expr(
+        f"n - (CAST(n AS BIGINT) * {2 * t_num} + {t_num + t_den - 1})"
+        f" div {t_num + t_den}"
+    )
     a = posting.select(
         F.col("id").alias("id_a"), F.col("n").alias("na"), "sig"
     )

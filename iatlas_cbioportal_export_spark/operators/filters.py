@@ -7,7 +7,7 @@ logic differs, so every operator here pins the pandas semantics with
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -44,15 +44,3 @@ def neq_filter_keep_nulls(df: DataFrame, col: str, value: str) -> DataFrame:
     """
     c = F.col(col)
     return df.filter((c != F.lit(value)) | c.isNull())
-
-
-def subset_eq(df: DataFrame, col: str, value: str) -> DataFrame:
-    """P3: per-dataset subset ``df[df[col] == value]``
-    (reference ``clinical.py:572-578``). At scale, prefer writing once with
-    ``partitionBy(col)`` over N subset passes — the writer in sinks.py does."""
-    return df.filter(F.col(col) == F.lit(value))
-
-
-def not_matches(value: Column, pattern: str) -> Column:
-    """Reusable NOT-rlike with ``na=False`` semantics."""
-    return ~F.coalesce(value.rlike(pattern), F.lit(False))

@@ -1,6 +1,11 @@
 """Study-bundle writer: the reference's complete per-dataset output surface
 (SURVEY.md §3.1 steps 6-7, §2.9) as one composed plan.
 
+This module is the only owner of the bundle layout: artifact names, meta
+documents and case lists are written here, and the CLI's ``maf``,
+``validate`` and ``load`` commands take the mutation artifact, the
+required-file names and the case-list rendering from here.
+
 For each dataset the reference emits (``clinical.py:572-656``, ``maf.py:168-216``,
 ``load.py:12-35``):
 
@@ -8,13 +13,16 @@ For each dataset the reference emits (``clinical.py:572-656``, ``maf.py:168-216`
   clinical views, 100%-null columns pruned (P5, ``clinical.py:581-582``),
   each with the 4 ``#``-prefixed cBioPortal metadata header lines that the
   ``insert_clinical_metadata.py`` subprocess used to add (``clinical.py:598-604``);
-- ``data_mutations_extended.txt`` parts — the annotated MAF, chunked to
+- ``data_mutations_extended/`` parts — the annotated MAF, chunked to
   ≤``max_rows`` rows per file (S4, ``maf.py:39-72``);
 - ``meta_*.txt`` — key:value descriptors per datatype plus ``meta_study.txt``
   (study id ``iatlas_{dataset}``, reference genome hg38, ``clinical.py:645-656``);
 - ``case_lists/`` — ``cases_all`` (every sample), ``cases_sequenced``
   (samples present in the mutation data — J5, ``load.py:16-18``), and one
-  list per CANCER_TYPE (A1+F7/F8, ``clinical.py:659-718``).
+  list per CANCER_TYPE (A1+F7/F8, ``clinical.py:659-718``). In the CLI chain
+  ``clinical`` writes the bundle without mutations and ``maf`` adds them, so
+  ``load`` writes the final ``cases_all``/``cases_sequenced``
+  (:func:`write_load_stage_case_lists`).
 
 Scale shape: the two clinical views and the MAF write distributed (csv sink
 tasks); only the case-list aggregation result (one row per cancer type, with
@@ -44,6 +52,115 @@ from iatlas_cbioportal_export_spark.sources.sinks import (
     write_chunked_tsv,
     write_single_tsv,
 )
+
+
+_MUTATIONS_ARTIFACT = "data_mutations_extended"
+_MUTATIONS_META = "meta_mutations_extended.txt"
+# Accepted spellings, ours first: the reference writes a single
+# data_mutations.txt (utils.py:11-22 REQUIRED_OUTPUT_FILES), this writer a
+# chunked directory (S4). Spark's csv scan reads a file or a directory alike.
+_MAF_ARTIFACT_NAMES = (
+    _MUTATIONS_ARTIFACT,
+    "data_mutations.txt",
+    "data_mutations_extended.txt",
+)
+_MAF_META_NAMES = (_MUTATIONS_META, "meta_mutations.txt")
+_CLINICAL_FILES = (
+    "data_clinical_patient.txt",
+    "data_clinical_sample.txt",
+    "meta_clinical_patient.txt",
+    "meta_clinical_sample.txt",
+    "meta_study.txt",
+)
+# The rest of the reference's 10 required files: pass-through matrices
+# this writer does not produce.
+PASSTHROUGH_FILES = (
+    "data_gene_signatures.txt",
+    "meta_gene_signatures.txt",
+    "data_rna_seq_mrna.txt",
+    "meta_rna_seq_mrna.txt",
+)
+
+
+def _first_present(bundle_dir: str, names: tuple[str, ...]) -> str | None:
+    return next(
+        (n for n in names if os.path.exists(os.path.join(bundle_dir, n))), None
+    )
+
+
+def _write_text(path: str, text: str) -> str:
+    with open(path, "w") as fh:
+        fh.write(text)
+    return path
+
+
+def mutation_data_path(bundle_dir: str) -> str | None:
+    """The bundle's mutation data under the first accepted spelling
+    present, or ``None``."""
+    name = _first_present(bundle_dir, _MAF_ARTIFACT_NAMES)
+    return None if name is None else os.path.join(bundle_dir, name)
+
+
+def required_files(bundle_dir: str) -> list[str]:
+    """V1's required names (``utils.py:11-22``) less the pass-throughs:
+    the clinical views and metas, ``meta_study.txt``, and the mutation data
+    and meta under whichever accepted spelling is present (ours if none)."""
+    return [
+        *_CLINICAL_FILES,
+        _first_present(bundle_dir, _MAF_ARTIFACT_NAMES) or _MUTATIONS_ARTIFACT,
+        _first_present(bundle_dir, _MAF_META_NAMES) or _MUTATIONS_META,
+    ]
+
+
+def write_mutations(
+    out_dir: str, dataset: str, mutations: DataFrame, max_rows: int = 40_000
+) -> dict[str, str]:
+    """The mutation artifact, chunked to ≤``max_rows`` rows per file, and its
+    meta descriptor (the reference's generate_meta_files step,
+    ``maf.py:209-216``); returns artifact name → path."""
+    maf_dir = os.path.join(out_dir, _MUTATIONS_ARTIFACT)
+    write_chunked_tsv(mutations, maf_dir, max_rows=max_rows)
+    meta = render_meta_file(
+        {
+            "cancer_study_identifier": f"iatlas_{dataset}",
+            "genetic_alteration_type": "MUTATION_EXTENDED",
+            "datatype": "MAF",
+            "data_filename": _MUTATIONS_ARTIFACT,
+        }
+    )
+    meta_path = _write_text(os.path.join(out_dir, _MUTATIONS_META), meta)
+    return {_MUTATIONS_ARTIFACT: maf_dir, _MUTATIONS_META: meta_path}
+
+
+def _write_load_stage_lists(
+    case_list_dir: str,
+    study_id: str,
+    all_ids: list[str],
+    seq_ids: list[str] | None,
+) -> dict[str, str]:
+    """``cases_all`` and, when ``seq_ids`` is given, ``cases_sequenced``.
+    The reference delegates both to the external datahub
+    generate_case_lists.py (``load.py:28-35``); the name/description follow
+    that tool's conf conventions ("All samples" / "... (NUM samples)", NUM =
+    id count) over the same documented case-list template the reference's
+    native per-type writer uses — byte-pinned by the bundle differential's
+    documented-format re-statement of the tool."""
+    lists = [("all", all_ids, "All samples", "All samples")]
+    if seq_ids is not None:
+        lists.append(
+            ("sequenced", seq_ids, "Sequenced samples", "Samples with mutation data")
+        )
+    artifacts: dict[str, str] = {}
+    for stem, ids, name, description in lists:
+        ids = sorted(ids)
+        _, text = render_case_list_text(
+            study_id, stem, ids, name=name,
+            description=f"{description} ({len(ids)} samples)",
+        )
+        artifacts[f"case_lists/cases_{stem}.txt"] = _write_text(
+            os.path.join(case_list_dir, f"cases_{stem}.txt"), text
+        )
+    return artifacts
 
 
 def _meta_clinical(study_id: str, datatype: str, filename: str) -> Mapping[str, object]:
@@ -124,9 +241,10 @@ def write_study_bundle(
         )
         meta_name = "meta_" + name[len("data_") :]
         datatype = "PATIENT_ATTRIBUTES" if "patient" in name else "SAMPLE_ATTRIBUTES"
-        meta_path = os.path.join(out_dir, meta_name)
-        with open(meta_path, "w") as fh:
-            fh.write(render_meta_file(_meta_clinical(study_id, datatype, name)))
+        meta_path = _write_text(
+            os.path.join(out_dir, meta_name),
+            render_meta_file(_meta_clinical(study_id, datatype, name)),
+        )
         return [(name, written), (meta_name, meta_path)]
 
     with ThreadPoolExecutor(max_workers=3) as pool:
@@ -167,44 +285,26 @@ def write_study_bundle(
             order_by=order_by.get("merged"),
         )
 
-    # Mutations: chunked distributed TSV + meta descriptor.
     if mutations is not None:
-        maf_dir = os.path.join(out_dir, "data_mutations_extended")
-        write_chunked_tsv(mutations, maf_dir, max_rows=max_maf_rows)
-        artifacts["data_mutations_extended"] = maf_dir
-        meta_path = os.path.join(out_dir, "meta_mutations_extended.txt")
-        with open(meta_path, "w") as fh:
-            fh.write(
-                render_meta_file(
-                    {
-                        "cancer_study_identifier": study_id,
-                        "genetic_alteration_type": "MUTATION_EXTENDED",
-                        "datatype": "MAF",
-                        "data_filename": "data_mutations_extended",
-                    }
-                )
-            )
-        artifacts["meta_mutations_extended.txt"] = meta_path
+        artifacts.update(write_mutations(out_dir, dataset, mutations, max_maf_rows))
 
     # meta_study.txt — byte-identical to the reference's native writer
     # (clinical.py:645-656: exact key order, TBD/PLACEHOLDER fields and
     # all; pinned by the rendering differential).
-    meta_study_path = os.path.join(out_dir, "meta_study.txt")
-    with open(meta_study_path, "w") as fh:
-        fh.write(
-            render_meta_file(
-                {
-                    "cancer_study_identifier": study_id,
-                    "type_of_cancer": "mixed",
-                    "name": "TBD",
-                    "pmid": "29033130",
-                    "reference_genome": "hg38",
-                    "citation": "PLACEHOLDER",
-                    "description": "PLACEHOLDER",
-                }
-            )
-        )
-    artifacts["meta_study.txt"] = meta_study_path
+    meta_study = render_meta_file(
+        {
+            "cancer_study_identifier": study_id,
+            "type_of_cancer": "mixed",
+            "name": "TBD",
+            "pmid": "29033130",
+            "reference_genome": "hg38",
+            "citation": "PLACEHOLDER",
+            "description": "PLACEHOLDER",
+        }
+    )
+    artifacts["meta_study.txt"] = _write_text(
+        os.path.join(out_dir, "meta_study.txt"), meta_study
+    )
 
     # Case lists. ONE aggregation pass (A1); collected result is one row per
     # cancer type carrying its (sorted) sample-id list (computed concurrently
@@ -215,31 +315,12 @@ def write_study_bundle(
         ids = row["sample_ids"]
         all_ids.extend(ids)
         slug, text = render_case_list_text(study_id, row[cancer_type_col], ids)
-        path = os.path.join(case_list_dir, f"cases_{slug}.txt")
-        with open(path, "w") as fh:
-            fh.write(text)
-        artifacts[f"case_lists/cases_{slug}.txt"] = path
-
-    # cases_all: the reference delegates this to the external datahub
-    # generate_case_lists.py (load.py:28-35); the name/description follow
-    # that tool's conf conventions ("All samples" / "... (NUM samples)",
-    # NUM = id count) over the same documented case-list template the
-    # reference's native per-type writer uses — byte-pinned by the bundle
-    # differential's documented-format re-statement of the tool.
-    path = os.path.join(case_list_dir, "cases_all.txt")
-    with open(path, "w") as fh:
-        fh.write(
-            render_case_list_text(
-                study_id,
-                "all",
-                sorted(all_ids),
-                name="All samples",
-                description=f"All samples ({len(all_ids)} samples)",
-            )[1]
+        artifacts[f"case_lists/cases_{slug}.txt"] = _write_text(
+            os.path.join(case_list_dir, f"cases_{slug}.txt"), text
         )
-    artifacts["case_lists/cases_all.txt"] = path
 
     # cases_sequenced: samples present in the mutation data (J5 semi-join).
+    seq_ids = None
     if mutations is not None:
         sequenced = (
             semi_join_sequenced(
@@ -251,21 +332,10 @@ def write_study_bundle(
             .select(sample_id_col)
             .collect()
         )
-        seq_ids = sorted(r[sample_id_col] for r in sequenced)
-        path = os.path.join(case_list_dir, "cases_sequenced.txt")
-        with open(path, "w") as fh:
-            fh.write(
-                render_case_list_text(
-                    study_id,
-                    "sequenced",
-                    seq_ids,
-                    name="Sequenced samples",
-                    description=(
-                        f"Samples with mutation data ({len(seq_ids)} samples)"
-                    ),
-                )[1]
-            )
-        artifacts["case_lists/cases_sequenced.txt"] = path
+        seq_ids = [r[sample_id_col] for r in sequenced]
+    artifacts.update(
+        _write_load_stage_lists(case_list_dir, study_id, all_ids, seq_ids)
+    )
 
     clinical_patient.unpersist()
     clinical_sample.unpersist()
@@ -319,59 +389,24 @@ def write_load_stage_case_lists(
         return {}
     samples = samples.select(sample_id_col).distinct()
 
-    case_list_dir = os.path.join(bundle_dir, "case_lists")
-    os.makedirs(case_list_dir, exist_ok=True)
-    artifacts: dict[str, str] = {}
-
-    ids = sorted(r[sample_id_col] for r in samples.collect())
-    path = os.path.join(case_list_dir, "cases_all.txt")
-    with open(path, "w") as fh:
-        fh.write(
-            render_case_list_text(
-                study_id,
-                "all",
-                ids,
-                name="All samples",
-                description=f"All samples ({len(ids)} samples)",
-            )[1]
-        )
-    artifacts["case_lists/cases_all.txt"] = path
-
-    maf_path = None
-    for n in ("data_mutations_extended", "data_mutations_extended.txt",
-              "data_mutations.txt"):
-        p = os.path.join(bundle_dir, n)
-        if os.path.exists(p):
-            maf_path = p
-            break
+    ids = [r[sample_id_col] for r in samples.collect()]
+    seq_ids = None
+    maf_path = mutation_data_path(bundle_dir)
     if maf_path is not None:
-        if os.path.isdir(maf_path):
-            maf = (
-                spark.read.option("sep", "\t")
-                .option("header", True)
-                .csv(maf_path)
-            )
-        else:
-            maf = read_tsv(spark, maf_path, comment="#")
+        # Only the barcodes are needed: no type inference pass.
+        maf = (
+            spark.read.option("sep", "\t")
+            .option("header", True)
+            .option("comment", "#")
+            .csv(maf_path)
+        )
         if barcode_col in maf.columns:
             sequenced = semi_join_sequenced(
                 samples, maf,
                 clinical_key=sample_id_col, mutation_key=barcode_col,
             ).collect()
-            seq_ids = sorted(r[sample_id_col] for r in sequenced)
-            path = os.path.join(case_list_dir, "cases_sequenced.txt")
-            with open(path, "w") as fh:
-                fh.write(
-                    render_case_list_text(
-                        study_id,
-                        "sequenced",
-                        seq_ids,
-                        name="Sequenced samples",
-                        description=(
-                            f"Samples with mutation data "
-                            f"({len(seq_ids)} samples)"
-                        ),
-                    )[1]
-                )
-            artifacts["case_lists/cases_sequenced.txt"] = path
-    return artifacts
+            seq_ids = [r[sample_id_col] for r in sequenced]
+
+    case_list_dir = os.path.join(bundle_dir, "case_lists")
+    os.makedirs(case_list_dir, exist_ok=True)
+    return _write_load_stage_lists(case_list_dir, study_id, ids, seq_ids)

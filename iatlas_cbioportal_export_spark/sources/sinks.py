@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
 from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame
@@ -149,7 +150,8 @@ def _concat_csv_parts(parts_dir: str, out_path: str, head_lines: list[str]) -> s
     """Driver-side merge of a csv sink's part files into ONE artifact file:
     ``head_lines`` first, then the column header from the first part, then
     every part's data rows in filename order (= global order when the frame
-    was written sorted)."""
+    was written sorted). The staging ``parts_dir`` is removed afterwards, so
+    only the artifact stays next to its siblings."""
     part_files = sorted(
         os.path.join(parts_dir, f)
         for f in os.listdir(parts_dir)
@@ -172,6 +174,7 @@ def _concat_csv_parts(parts_dir: str, out_path: str, head_lines: list[str]) -> s
                     wrote_col_header = True
                 for line in fh:
                     out.write(line)
+    shutil.rmtree(parts_dir)
     return out_path
 
 

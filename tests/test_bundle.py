@@ -104,6 +104,49 @@ def test_bundle_maf_chunking(spark, tmp_path):
     assert len(parts) >= 2
 
 
+def test_bundle_leaves_no_staging_dirs(spark, tmp_path):
+    """The single-file artifacts are merged from a csv sink's ``*.parts``
+    staging dir; the bundle holds only artifacts once the writer returns."""
+    patient, sample, maf = _fixtures(spark)
+    out = str(tmp_path / "bundle3")
+    write_study_bundle(
+        out, "Demo_2026", patient, sample, mutations=maf, clinical_merged=sample
+    )
+    assert os.path.exists(os.path.join(out, "data_clinical_merged.txt"))
+    staged = [
+        os.path.join(root, name)
+        for root, dirs, files in os.walk(out)
+        for name in dirs + files
+        if name.endswith(".parts")
+    ]
+    assert staged == []
+
+
+def test_load_stage_case_lists_match_bundle_writer(spark, tmp_path):
+    """The load stage re-derives cases_all/cases_sequenced from the written
+    artifacts (clinical sample file + chunked MAF directory); the bytes
+    equal the ones the bundle writer rendered from the frames."""
+    from iatlas_cbioportal_export_spark.plans.bundle import (
+        write_load_stage_case_lists,
+    )
+
+    patient, sample, maf = _fixtures(spark)
+    out = str(tmp_path / "bundle4")
+    artifacts = write_study_bundle(
+        out, "Demo_2026", patient, sample, mutations=maf, max_maf_rows=2
+    )
+    names = ["case_lists/cases_all.txt", "case_lists/cases_sequenced.txt"]
+    written = {}
+    for name in names:
+        with open(artifacts[name], "rb") as fh:
+            written[name] = fh.read()
+        os.remove(artifacts[name])
+    assert sorted(write_load_stage_case_lists(spark, out)) == names
+    for name in names:
+        with open(os.path.join(out, name), "rb") as fh:
+            assert fh.read() == written[name], name
+
+
 def test_single_tsv_global_order_across_many_partitions(spark, tmp_path):
     """r9 byte-parity plumbing under REAL parallelism: write_single_tsv with
     order_by over a 5000-row, 32-partition frame must produce ONE file in

@@ -335,6 +335,38 @@ def test_jaccard_auto_avoids_deletion_on_huge_sets(spark):
     assert got == {(0, 1): round(1999 / 2000, 6)}
 
 
+@pytest.mark.parametrize("ansi", ["false", "true"])
+@pytest.mark.parametrize("blocking", ["prefix", "deletion"])
+def test_jaccard_join_long_sets_bounds_do_not_overflow(spark, blocking, ansi):
+    """Both schemes' candidate bounds multiply a set size by a ~2e6
+    micro-unit literal (t = 0.998 → 998,000 and 1,998,000). Past ~1,075
+    tokens that product leaves int32: with ANSI off it wraps, and the
+    positional filter drops this true pair (both prefix matches, at rarity
+    ranks (1, 0) and (2, 1), have overlap bounds 1,076 and 1,075 whose
+    products wrap negative); with ANSI on the query raises. The bounds
+    must run in long arithmetic."""
+    from iatlas_cbioportal_export_spark.operators.dedup import (
+        jaccard_prefix_join,
+    )
+
+    base = [f"w{k:05d}" for k in range(1077)]
+    # doc 1 == doc 0 minus its rarest token: J = 1076/1077 = 0.99907 >= t.
+    docs = [(0, " ".join(base)), (1, " ".join(base[1:]))]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        got = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in jaccard_prefix_join(
+                df, threshold=0.998, blocking=blocking
+            ).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
+    assert got == {(0, 1): round(1076 / 1077, 6)}
+
+
 def test_containment_join_finds_planted_excerpt(spark):
     from iatlas_cbioportal_export_spark.operators.dedup import (
         containment_join,

@@ -9,6 +9,7 @@ DuckDB over the same parquet tables, then compares row count, schema
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
@@ -16,7 +17,7 @@ import traceback
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from iatlas_cbioportal_export_spark import get_spark  # noqa: E402

@@ -15,10 +15,11 @@ Usage: python tools/explain_plans.py [sf_dir]   (writes PLANS.md)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from iatlas_cbioportal_export_spark import get_spark  # noqa: E402

@@ -8,11 +8,13 @@ Usage:
 
 from __future__ import annotations
 
+import os
 import re
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 LINE = re.compile(r"(OK|FAIL|rows)\s+(\w+): (\d+) rows \[([0-9.]+)s\]")
 
@@ -42,7 +44,7 @@ def main() -> int:
         ["git", "rev-parse", "--short", "HEAD"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
     ).stdout.strip()
     n_ok = sum(1 for n in names if engine.get(n, ("?",))[0] == "OK")
     n_ok_p = sum(1 for n in names if plain.get(n, ("?",))[0] == "OK")
@@ -72,7 +74,7 @@ def main() -> int:
             f" {p[0] if p else 'missing'} |"
             f" {e[1] if e else '-'} | {e[2] if e else '-'} |"
         )
-    open("/root/repo/PARITY_LOCAL.md", "w").write("\n".join(rows) + "\n")
+    open(os.path.join(REPO_ROOT, "PARITY_LOCAL.md"), "w").write("\n".join(rows) + "\n")
     missing = [n for n in names if n not in engine or n not in plain]
     print(f"wrote PARITY_LOCAL.md: {n_ok}/{len(names)} engine OK, "
           f"{n_ok_p}/{len(names)} bare OK, missing={missing}")

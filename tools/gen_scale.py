@@ -30,7 +30,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -44,7 +45,7 @@ def main() -> None:
     out_dir = (
         sys.argv[2]
         if len(sys.argv) > 2
-        else f"/root/repo/.scaledata/sf{factor / 10:g}"
+        else os.path.join(REPO_ROOT, ".scaledata", f"sf{factor / 10:g}")
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("gen-scale", extra_conf={"spark.driver.memory": "48g"})

@@ -32,7 +32,8 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from iatlas_cbioportal_export_spark import get_spark  # noqa: E402
@@ -255,7 +256,7 @@ def main() -> None:
                 f"| {name} | {srcs} | {in_rec} | {fmt_bytes(sw)} "
                 f"| {ratio} | {nst} | {wall:.1f}s |"
             )
-        with open("/root/repo/SHUFFLE.md", "w") as f:
+        with open(os.path.join(REPO_ROOT, "SHUFFLE.md"), "w") as f:
             f.write("\n".join(lines) + "\n")
         print("\nSHUFFLE.md written")
 

@@ -21,10 +21,11 @@ Usage: python tools/skew_bench.py [sf_dir]   (default /root/testdata/sf0.1)
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -115,12 +115,21 @@ def cmd_maf(args: argparse.Namespace) -> int:
         print("no .maf files found", file=sys.stderr)
         return 1
     annotator = http_annotator(args.endpoint) if args.endpoint else fake_annotator
-    ok, failed = split_annotation_errors(annotate(maf, annotator=annotator))
-    write_mutations(args.out, args.dataset, drop_chrm(ok), max_rows=args.max_rows)
-    n_failed = failed.count()
-    if n_failed:
-        write_chunked_tsv(failed, os.path.join(args.out, "annotation_errors"))
-        print(f"{n_failed} rows failed annotation", file=sys.stderr)
+    # The chunked write counts, then writes; the error side-band counts too.
+    # Each action would re-run the annotator (with --endpoint, another round
+    # of service calls that may fail differently), so the annotated frame is
+    # cached once, every action reads the cache, and this command releases
+    # it on every exit path.
+    annotated = annotate(maf, annotator=annotator).persist()
+    try:
+        ok, failed = split_annotation_errors(annotated)
+        write_mutations(args.out, args.dataset, drop_chrm(ok), max_rows=args.max_rows)
+        n_failed = failed.count()
+        if n_failed:
+            write_chunked_tsv(failed, os.path.join(args.out, "annotation_errors"))
+            print(f"{n_failed} rows failed annotation", file=sys.stderr)
+    finally:
+        annotated.unpersist(blocking=True)
     return 0
 
 
@@ -222,10 +231,10 @@ def cmd_validate(args: argparse.Namespace) -> int:
     # --- mutation data: V12 schema, value conformance, referential checks ---
     maf_path = mutation_data_path(bundle)
     if maf_path is not None:
-        # Inferred types (file or chunked directory alike): a header-only
-        # read would make every column a string and turn numeric checks
-        # (position ordering, allele counts) lexicographic.
-        maf = read_tsv(spark, maf_path, comment="#")
+        # Header-only (file or chunked directory alike), every column a
+        # string: no inference pass over every column of the annotated MAF.
+        # The numeric checks cast (maf_value_conformance).
+        maf = read_tsv_skip_cbioportal_header(spark, maf_path)
         findings.append(
             required_columns_present(
                 maf, REQUIRED_MAF_COLS, check="maf_required_columns"

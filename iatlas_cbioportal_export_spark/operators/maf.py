@@ -11,6 +11,12 @@ reference. The real service needs network + docker (not available here), so
 the annotator is pluggable: a deterministic fake implements the same
 contract (adds annotation columns + routes failures to an error side-band)
 for tests; the HTTP implementation is a drop-in.
+
+In the ``maf`` command the folder is read with one scan per distinct header
+(``sources/readers.py::read_maf_folder``) and each row is annotated once per
+command: the annotated frame is persisted, the error split, the chunked
+write and the failure count all read that cache, and the command releases
+it before returning, on error too (``cli.py::cmd_maf``).
 """
 
 from __future__ import annotations

@@ -393,13 +393,7 @@ def write_load_stage_case_lists(
     seq_ids = None
     maf_path = mutation_data_path(bundle_dir)
     if maf_path is not None:
-        # Only the barcodes are needed: no type inference pass.
-        maf = (
-            spark.read.option("sep", "\t")
-            .option("header", True)
-            .option("comment", "#")
-            .csv(maf_path)
-        )
+        maf = read_tsv_skip_cbioportal_header(spark, maf_path)
         if barcode_col in maf.columns:
             sequenced = semi_join_sequenced(
                 samples, maf,

@@ -6,8 +6,10 @@ id remap (F4) → neoantigen outer join (J3) → header rename (P6) → regex
 filter (P1) → status recode (F3) → days→months ×2 (F5) → suffix strip (F1)
 → case normalization (F2) → oncotree code expansion (J4). The reference
 materializes TSV between stages and shells out twice; here it is one DAG —
-Catalyst reorders/pushes filters, both dimension joins broadcast, and the
-caller materializes once (``cache()``) before the patient/sample split.
+Catalyst reorders/pushes filters and both dimension joins broadcast. The
+frame comes back lazy; the bundle writer persists the patient and sample
+views it is split into, each for the writer's lifetime
+(``plans/bundle.py::write_study_bundle``).
 """
 
 from __future__ import annotations
@@ -74,22 +76,32 @@ def preprocess_clinical(
     out = regex_filter_scoped(
         out, "SAMPLE_ID", SAMPLE_FILTER_PATTERN, "Dataset", SAMPLE_FILTER_DATASET
     )
-    # F3 status recode (clinical.py:403-422)
-    for c in ("OS_STATUS", "PFS_STATUS"):
-        if c in out.columns:
-            out = out.withColumn(c, recode_values(c, STATUS_RECODE))
-    # F5 days→months (clinical.py:515-535)
-    for c in ("OS_MONTHS", "PFS_MONTHS"):
-        if c in out.columns:
-            out = out.withColumn(c, days_to_months(c))
+    # F3 status recode (clinical.py:403-422) and F5 days→months
+    # (clinical.py:515-535) touch disjoint columns: one projection, built
+    # against one read of the column list (each withColumn re-analyzes the
+    # whole plan; CollapseProject yields the same optimized plan either way)
+    cols = set(out.columns)
+    recoded = {
+        c: recode_values(c, STATUS_RECODE)
+        for c in ("OS_STATUS", "PFS_STATUS")
+        if c in cols
+    }
+    recoded.update(
+        {c: days_to_months(c) for c in ("OS_MONTHS", "PFS_MONTHS") if c in cols}
+    )
+    if recoded:
+        out = out.withColumns(recoded)
     # F1 suffix strip over all string columns (clinical.py:98-133); the
     # reference additionally strips "_amadeus" from the exact column
     # AMADEUS_STUDY after the general per-column strip (clinical.py:123-126)
     out = strip_colname_suffixes(out, special={"AMADEUS_STUDY": "_amadeus"})
-    # F2 case normalization driven by the mapping's Case column
-    for c, mode in (case_modes or {}).items():
-        if c in out.columns:
-            out = out.withColumn(c, case_normalize(c, mode))
+    # F2 case normalization driven by the mapping's Case column, one projection
+    cols = set(out.columns)
+    normalized = {
+        c: case_normalize(c, mode) for c, mode in (case_modes or {}).items() if c in cols
+    }
+    if normalized:
+        out = out.withColumns(normalized)
     # J4 oncotree code expansion (native replacement of the subprocess)
     if oncotree_codes is not None:
         out = code_expansion_join(

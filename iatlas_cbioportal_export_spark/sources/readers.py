@@ -6,10 +6,11 @@ Reference behavior being re-expressed (not copied):
   inferred dtypes; we declare schemas so the whole ``%.12g`` float-format
   subplot disappears).
 - S2 multi-file MAF folder scan with ``comment="#"`` skip and outer column
-  alignment (reference: ``maf.py:14-36``).
+  alignment, one scan per distinct header (reference: ``maf.py:14-36``).
 - S3 header-skipping re-read of cBioPortal clinical output (reference:
   ``clinical.py:798-808`` with ``skiprows=4``; the 4 header rows are
-  ``#``-prefixed so a comment option expresses the same scan).
+  ``#``-prefixed so a comment option expresses the same scan), header-only
+  unless a schema is given.
 
 Scale notes: every reader returns a lazy DataFrame; globbed multi-file reads
 parallelize across executors; column pruning and predicate pushdown reach the
@@ -48,19 +49,22 @@ def read_tsv(
     With ``schema=None`` we fall back to sampled inference (one extra pass) —
     acceptable for tiny dimension tables, wrong for 100 TB fact tables.
     """
+    reader = _tsv_reader(spark, comment)
+    if schema is not None:
+        reader = reader.schema(schema)
+    else:
+        reader = reader.option("inferSchema", True)
+    return reader.csv(path)
+
+
+def _tsv_reader(spark: SparkSession, comment: str | None = None):
     reader = (
         spark.read.option("sep", "\t")
         .option("header", True)
         .option("nullValue", "")
         .option("emptyValue", "")
     )
-    if comment:
-        reader = reader.option("comment", comment)
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
-    return reader.csv(path)
+    return reader.option("comment", comment) if comment else reader
 
 
 def read_maf_folder(
@@ -72,9 +76,16 @@ def read_maf_folder(
 
     The reference reads each file then ``pd.concat(ignore_index=True)`` which
     outer-aligns columns by NAME (``maf.py:14-36``). With a declared schema a
-    single globbed scan expresses that; with heterogeneous headers we read
-    per-file and ``unionByName(allowMissingColumns=True)`` — same semantics,
-    still a parallel scan per file.
+    single scan over every file expresses that. Without one, the files are
+    grouped by header line and each group is ONE inferred scan; the groups
+    are ``unionByName(allowMissingColumns=True)``-aligned. A folder of
+    same-header files is therefore one scan: one inference pass, and Spark
+    packs the files into input partitions by size instead of one or more
+    partitions per file.
+
+    Types are inferred over all files of a group, as if they were one file:
+    a column empty in one file and integer in another reads as integer.
+    Across groups, ``unionByName`` widens differing types as before.
 
     Returns ``None`` when the folder holds no ``.maf`` files (reference
     returns ``None`` for an empty folder).
@@ -86,18 +97,39 @@ def read_maf_folder(
         return None
     if schema is not None:
         return read_tsv(spark, files, schema=schema, comment="#")  # type: ignore[arg-type]
-    dfs = [read_tsv(spark, f, comment="#") for f in files]
+    groups: dict[bytes | None, list[str]] = {}
+    for f in files:
+        groups.setdefault(_header_line(f), []).append(f)
+    dfs = [read_tsv(spark, g, comment="#") for g in groups.values()]  # type: ignore[arg-type]
     out = dfs[0]
     for df in dfs[1:]:
         out = out.unionByName(df, allowMissingColumns=True)
     return out
 
 
+def _header_line(path: str) -> bytes | None:
+    """The line a ``comment="#"`` header'd csv scan takes as its header: the
+    first one neither blank nor ``#``-prefixed (Spark's own filter), line
+    ending stripped; ``None`` for a file without one."""
+    with open(path, "rb") as fh:
+        for line in fh:
+            if line.strip() and not line.startswith(b"#"):
+                return line.rstrip(b"\r\n")
+    return None
+
+
 def read_tsv_skip_cbioportal_header(
     spark: SparkSession, path: str, schema: StructType | None = None
 ) -> DataFrame:
-    """S3: re-read a cBioPortal clinical file, dropping the 4 ``#`` header rows."""
-    return read_tsv(spark, path, schema=schema, comment="#")
+    """S3: re-read a cBioPortal bundle artifact (a clinical view with its 4
+    ``#`` header rows, or the mutation data, file or chunked directory),
+    dropping ``#`` lines.
+
+    Without ``schema`` the read is header-only: every column is a string and
+    no inference pass runs over the data. Checks that need numbers cast
+    (``maf_value_conformance``); ids compare as the text the file holds."""
+    reader = _tsv_reader(spark, comment="#")
+    return (reader.schema(schema) if schema is not None else reader).csv(path)
 
 
 def read_jsonl(

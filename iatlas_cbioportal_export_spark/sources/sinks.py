@@ -100,12 +100,12 @@ def write_chunked_tsv(
 ) -> None:
     """S4: bound rows-per-output-file without driver-side slicing.
 
-    ``maxRecordsPerFile`` rolls files inside each task. We additionally
-    repartition to ceil(n/max_rows) only when the frame is small enough that a
-    single task would otherwise emit everything (matches the reference's
-    ceil-division chunk count, ``maf.py:43,63``) — on a large cluster the
-    natural partitioning already spreads rows and repartition is skipped by
-    passing ``repartition_small=False`` upstream if desired.
+    Counts the frame (one action), then always repartitions it to
+    ceil(n/max_rows) partitions — the reference's ceil-division chunk count
+    (``maf.py:43,63``) — and writes with ``maxRecordsPerFile``, which rolls a
+    new file inside a task that would exceed ``max_rows``. The frame is thus
+    computed twice (count, write); a caller whose frame is costly to compute
+    persists it first. An empty frame writes a header-only output.
     """
     n = df.count()
     if n == 0:

@@ -88,6 +88,52 @@ def test_cli_clinical_validate_load_roundtrip(spark, tmp_path):
     assert os.path.exists(os.path.join(dest, "meta_study.txt"))
 
 
+def test_cli_maf_annotates_each_row_once(spark, tmp_path, monkeypatch):
+    """The count, the write and the error count of ``cli maf`` all read one
+    annotation: each input row passes the annotator exactly once."""
+    from iatlas_cbioportal_export_spark.operators import maf as maf_ops
+
+    original = maf_ops.fake_annotator
+    rows = spark.sparkContext.accumulator(0)
+
+    def counting_annotator(batch):  # runs in the Python workers
+        rows.add(len(batch))
+        return original(batch)
+
+    monkeypatch.setattr(maf_ops, "fake_annotator", counting_annotator)
+    _, _, _, maf_dir = _write_inputs(tmp_path)
+    (maf_dir / "y.maf").write_text(_full_width_maf())
+    out = str(tmp_path / "bundle")
+    assert main(["maf", "--maf-folder", str(maf_dir), "--out", out]) == 0
+    assert rows.value == 6  # 2 files x 3 rows
+
+
+def test_cli_maf_releases_annotation_cache(spark, tmp_path, monkeypatch):
+    """``cli maf`` caches the annotated frame while it runs and releases it
+    before returning, also when the write raises."""
+    from iatlas_cbioportal_export_spark.plans import bundle
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    _, _, _, maf_dir = _write_inputs(tmp_path)
+    args = ["maf", "--maf-folder", str(maf_dir), "--out", str(tmp_path / "b")]
+    assert main(args) == 0
+    assert jsc.getPersistentRDDs().size() == before
+
+    cached_during_write = []
+
+    def failing_write(out_dir, dataset, mutations, max_rows=40_000):
+        mutations.count()
+        cached_during_write.append(jsc.getPersistentRDDs().size() - before)
+        raise OSError("disk full")
+
+    monkeypatch.setattr(bundle, "write_mutations", failing_write)
+    with pytest.raises(OSError, match="disk full"):
+        main(args)
+    assert cached_during_write == [1]
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_cli_validate_fails_on_missing_file(tmp_path):
     assert main(["validate", "--bundle", str(tmp_path / "nope")]) == 1
 

@@ -40,6 +40,40 @@ def test_read_maf_folder_union_heterogeneous(spark, tmp_path):
     assert rows["KRAS"]["t_alt_count"] == 5 and rows["KRAS"]["Chromosome"] is None
 
 
+def _csv_scans(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count("FileScan csv")
+
+
+def test_read_maf_folder_one_scan_per_header(spark, tmp_path):
+    # Same-header files are one scan whatever their comment/blank preamble;
+    # a file with another header is a scan of its own.
+    _write(tmp_path / "a.maf", "#version 2.4\nHugo_Symbol\tChromosome\nTP53\tchr17\n")
+    _write(tmp_path / "b.maf", "\n#x\nHugo_Symbol\tChromosome\nKRAS\tchr12\n")
+    _write(tmp_path / "c.maf", "Hugo_Symbol\tChromosome\nBRAF\tchr7\n")
+    df = read_maf_folder(spark, str(tmp_path))
+    assert _csv_scans(df) == 1
+    assert sorted(r["Hugo_Symbol"] for r in df.collect()) == ["BRAF", "KRAS", "TP53"]
+
+    _write(tmp_path / "d.maf", "#version 2.4\nHugo_Symbol\tt_alt_count\nEGFR\t4\n")
+    df = read_maf_folder(spark, str(tmp_path))
+    assert _csv_scans(df) == 2
+    rows = {r["Hugo_Symbol"]: r for r in df.collect()}
+    assert set(rows) == {"BRAF", "KRAS", "TP53", "EGFR"}
+    assert rows["EGFR"]["t_alt_count"] == 4 and rows["EGFR"]["Chromosome"] is None
+    assert rows["TP53"]["Chromosome"] == "chr17" and rows["TP53"]["t_alt_count"] is None
+
+
+def test_read_maf_folder_infers_types_over_a_header_group(spark, tmp_path):
+    # Same-header files are inferred as one file: a column empty in one file
+    # and integer in another is integer (a per-file read made it string).
+    _write(tmp_path / "a.maf", "Hugo_Symbol\tt_alt_count\nTP53\t\n")
+    _write(tmp_path / "b.maf", "Hugo_Symbol\tt_alt_count\nKRAS\t5\n")
+    df = read_maf_folder(spark, str(tmp_path))
+    assert dict(df.dtypes)["t_alt_count"] == "int"
+    rows = {r["Hugo_Symbol"]: r["t_alt_count"] for r in df.collect()}
+    assert rows == {"TP53": None, "KRAS": 5}
+
+
 def test_annotate_adds_columns_and_errors_split(spark):
     df = spark.createDataFrame(
         [("TP53", "chr17"), ("KRAS", "chr12")], "Hugo_Symbol string, Chromosome string"
